@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe: runs the REAL declared queries on a base scale and on an
   * N×-larger staged copy of the same data (tools/make_sf1.py — key-shifted
   * unions, joins stay consistent), and reports wall-clock scaling ratios.
@@ -333,15 +331,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(baseDir, bigDir, factorStr) = args.take(3)
     val factor = factorStr.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     def run(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -138,12 +138,15 @@ object Tables {
     val p = spark.sparkContext.defaultParallelism.toLong
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       .min(BigInt(Long.MaxValue)).toLong
-    val want = math.min(p, (bytes + targetBytes - 1) / targetBytes)
+    // Unknown stats read as Long.MaxValue bytes, so `bytes + d - 1` would
+    // wrap; this ceil-divide cannot.
+    def ceilDiv(a: Long, d: Long): Long = a / d + (if (a % d == 0) 0 else 1)
+    val want = math.min(p, ceilDiv(bytes, targetBytes))
     // Estimated scan width from the file layout (what FilePartition
     // packing yields for splittable sources) — parquet cannot split
     // below a row group, so this upper-bounds the effective width.
     val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
-    val scanParts = math.max(1L, (bytes + maxPB - 1) / maxPB)
+    val scanParts = math.max(1L, ceilDiv(bytes, maxPB))
     if (scanParts < want) df.repartition(want.toInt, key) else df
   }
 }

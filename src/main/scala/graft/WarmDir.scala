@@ -1,12 +1,13 @@
 package graft
 
 /** Smallest-SF-sibling warm-up dir resolution, shared by Bench (streaming
-  * warm-up canary) and TimeQuery (JIT warm-up run). Extracted in round 10:
-  * the two copy-pasted snippets had already diverged (only TimeQuery
-  * honored SPARK_GRAFT_WARM_DIR), and the distinctness check compared raw
-  * strings — a trailing slash, relative spelling, or symlinked prefix of
-  * the timed dir would pass as a "different" warm-up source and silently
-  * turn the timed region into a second, cache-warmed execution.
+  * warm-up canary) and `Dev time` (JIT warm-up run). Extracted in round
+  * 10: the two copy-pasted snippets had already diverged (only the
+  * single-query timer honored SPARK_GRAFT_WARM_DIR), and the distinctness
+  * check compared raw strings — a trailing slash, relative spelling, or
+  * symlinked prefix of the timed dir would pass as a "different" warm-up
+  * source and silently turn the timed region into a second, cache-warmed
+  * execution.
   */
 object WarmDir {
   private def norm(p: String): java.nio.file.Path = {

@@ -194,10 +194,11 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
 /** [[SortedLongIntersectCount]] with POSITIONAL early abandonment (PPJoin's
   * suffix bound, Xiao et al. WWW'08) for consumers that filter on
   * `jac >= tau` (round 22, r21 verdict #5): jac = c/(n+m-c) >= tau forces
-  * c >= ceil(tau*(n+m)/(1+tau)) =: needed, and at any merge position the
-  * final count is bounded by c + min(remaining_a, remaining_b) — once that
-  * bound drops below `needed`, the walk stops and the PARTIAL count is
-  * returned.
+  * c >= needed, the smallest count that passes that filter in its own
+  * double arithmetic (see [[SortedLongIntersectCountBounded.needed]]), and
+  * at any merge position the final count is bounded by
+  * c + min(remaining_a, remaining_b) — once that bound drops below
+  * `needed`, the walk stops and the PARTIAL count is returned.
   *
   * Output equivalence under the tau filter: for a pair with true jac >= tau
   * the bound never fires (the bound is an upper bound on the true count,
@@ -212,7 +213,7 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
   * the tail of the walk.
   *
   * tau is a plan-time literal (the declared thresholds are constants), so
-  * `needed` folds into the generated code as arithmetic on the two lengths.
+  * the generated code computes `needed` from the two lengths alone.
   */
 case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
     tau: Double) extends BinaryExpression {
@@ -232,7 +233,7 @@ case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val (n, m) = (x.numElements(), y.numElements())
-    val needed = math.ceil(tau * (n + m) / (1.0 + tau)).toLong
+    val needed = SortedLongIntersectCountBounded.needed(tau, n, m)
     var i = 0; var j = 0; var c = 0L
     while (i < n && j < m) {
       val xi = x.getLong(i); val yj = y.getLong(j)
@@ -251,9 +252,10 @@ case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
       val i = ctx.freshName("i"); val j = ctx.freshName("j")
       val c = ctx.freshName("c"); val needed = ctx.freshName("needed")
       val xi = ctx.freshName("xi"); val yj = ctx.freshName("yj")
+      val self = SortedLongIntersectCountBounded.getClass.getName + ".MODULE$"
       s"""
          |int $n = $x.numElements(); int $m = $y.numElements();
-         |long $needed = (long) java.lang.Math.ceil($tau * ($n + $m) / ${1.0 + tau});
+         |long $needed = $self.needed($tau, $n, $m);
          |int $i = 0; int $j = 0; long $c = 0L;
          |while ($i < $n && $j < $m) {
          |  long $xi = $x.getLong($i); long $yj = $y.getLong($j);
@@ -269,4 +271,22 @@ case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedLongIntersectCountBounded =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedLongIntersectCountBounded {
+  /** Smallest c with `c.toDouble / (n + m - c).toDouble >= tau`: the same
+    * double division the consumers' jaccard filter evaluates, so a pair
+    * that passes the filter never trips the bound. The closed form
+    * ceil(tau*(n+m)/(1+tau)) is only the starting guess — in doubles it
+    * can overshoot by one (tau=0.8, n=28, m=35 gives 29, yet c=28 yields
+    * jac == 0.8 exactly). The division is monotone in c, so stepping from
+    * the guess finds the boundary in a step or two.
+    */
+  def needed(tau: Double, n: Int, m: Int): Long = {
+    def passes(c: Long): Boolean = c.toDouble / (n + m - c).toDouble >= tau
+    var c = math.ceil(tau * (n + m) / (1.0 + tau)).toLong
+    while (c > 0 && passes(c - 1)) c -= 1
+    while (c < n + m && !passes(c)) c += 1
+    c
+  }
 }

@@ -110,11 +110,11 @@ object EventStream {
     // previous computeIfAbsent held the hash-bin lock for the duration of
     // a full Spark write job, blocking concurrent first-touch callers even
     // for other types). Two racing first-touch callers now each write
-    // their own temp dir and putIfAbsent decides the winner — the loser's
-    // file is orphaned temp-dir garbage, never read. The file is written
-    // under the FIRST caller session's writer conf and reused by later
-    // sessions; all harness sessions share the writer-relevant conf
-    // (UTC, parquet defaults), which is the assumption this cache makes.
+    // their own temp dir and putIfAbsent decides the winner; the loser
+    // deletes its own dir. The file is written under the FIRST caller
+    // session's writer conf and reused by later sessions; every session
+    // built by graft.Session shares the writer-relevant conf (UTC, parquet
+    // defaults), which is the assumption this cache makes.
     val cached = sentinelCache.get(tsType)
     val sentinelDir = if (cached != null) cached else {
       val t = tsType
@@ -132,7 +132,8 @@ object EventStream {
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString + "/sentinel")
       val mine = tmp.toString + "/sentinel"
       val prev = sentinelCache.putIfAbsent(t, mine)
-      if (prev != null) prev else mine
+      if (prev == null) mine
+      else { org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile); prev }
     }
     readEventsGlob(spark, s"$dir/events.parque*", tsType)
       .unionAll(readEventsGlob(spark, sentinelDir, tsType))

@@ -6,10 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test harness (SURVEY §5.2): one SparkSession + one DuckDB
-  * connection per forked test JVM, both pinned to the exact configuration
-  * the driver's Verify/parity flow uses (UTC, ANSI off, small shuffle
-  * partitions), with views over a scale-factor directory of the
-  * driver-generated parquet tables.
+  * connection per forked test JVM, the session built by [[Session]] as
+  * Verify's and Bench's are, with views over a scale-factor directory of
+  * the generated parquet tables.
   */
 object TestEnv {
   val Sf001  = "/root/testdata/sf0.001"
@@ -26,18 +25,9 @@ object TestEnv {
   def sfBenchExists: Boolean =
     java.nio.file.Files.isDirectory(java.nio.file.Paths.get(SfBench))
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Four cores whatever SPARK_GRAFT_CPUS says: plan pins and partition
+    * counts in the suites are written against local[4]. */
+  lazy val spark: SparkSession = Session(4)
 
   /** DuckDB oracle over the same parquet files (in-JVM, offline). */
   def duck(sfDir: String): Connection = {

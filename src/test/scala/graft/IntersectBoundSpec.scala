@@ -19,7 +19,8 @@ import graft.functions.VectorOps
   *
   * Both the codegen path (DataFrame select) and the interpreted path
   * (nullSafeEval via the expression directly) are exercised, across sizes
-  * 0..~200 and overlap regimes clustered around the threshold.
+  * 0..~200 and overlap regimes clustered around the threshold, plus pairs
+  * exactly at the threshold.
   */
 class IntersectBoundSpec extends GraftSpec {
   import TestEnv.spark.implicits._
@@ -28,9 +29,24 @@ class IntersectBoundSpec extends GraftSpec {
     if (n + m - inter == 0) Double.NaN
     else inter.toDouble / (n + m - inter).toDouble
 
+  private val taus = Seq(0.5, 0.8, 0.9)
+
+  /** Pairs whose jaccard is exactly tau in doubles — (tau, n, m, c) =
+    * (0.8, 28, 35, 28), (0.8, 31, 32, 28), (0.9, 9, 10, 9), (0.9, 19, 19,
+    * 18) — where the closed form ceil(tau*(n+m)/(1+tau)) overshoots c by
+    * one. b's first element sorts before all of a, so the walk opens on a
+    * mismatch, the step where the bound is checked.
+    */
+  private val boundaryPairs: Seq[(Array[Long], Array[Long])] =
+    Seq((28, 35, 28), (31, 32, 28), (9, 10, 9), (19, 19, 18)).map {
+      case (n, m, c) =>
+        val core = (1 to c).map(100L + _)
+        ((core ++ (1 to n - c).map(10000L + _)).toArray,
+          (0L +: (core ++ (1 until m - c).map(20000L + _))).toArray)
+    }
+
   test("bounded intersect is exact above tau and filter-equivalent below") {
     val rnd = new Random(0xB0DE22)
-    val taus = Seq(0.5, 0.8, 0.9)
     // Pairs engineered to straddle each threshold: draw a shared core of
     // k elements plus disjoint tails, so true jac = k / (k + ta + tb)
     // sweeps through the threshold as the tails grow.
@@ -44,13 +60,15 @@ class IntersectBoundSpec extends GraftSpec {
       val tailA = Seq.fill(ta)(1000000L + rnd.nextLong(1000000L)).distinct
       val tailB = Seq.fill(tb)(2000000L + rnd.nextLong(1000000L)).distinct
       ((core ++ tailA).sorted.toArray, (core ++ tailB).sorted.toArray)
-    } ++ Seq( // edge shapes
+    } ++ boundaryPairs ++ Seq( // edge shapes
       (Array.empty[Long], Array.empty[Long]),
       (Array.empty[Long], Array(1L, 2L, 3L)),
       (Array(5L), Array(5L)),
       (Array(1L, 2L, 3L), Array(1L, 2L, 3L)))
 
-    val df = pairs.toDF("a", "b")
+    // RDD-backed, so the select runs generated code: over a local Seq the
+    // optimizer would fold the projection through the interpreted path.
+    val df = spark.sparkContext.parallelize(pairs).toDF("a", "b")
     for (tau <- taus) {
       val rows = df.select(
         size(col("a")).as("n"), size(col("b")).as("m"),
@@ -86,19 +104,23 @@ class IntersectBoundSpec extends GraftSpec {
     val rnd = new Random(0x1E7B0DE)
     def lit(a: Array[Long]) =
       Literal(ArrayData.toArrayData(a), ArrayType(LongType, containsNull = false))
-    for (_ <- 0 until 300) {
+    val random = (0 until 300).map { _ =>
       val k = rnd.nextInt(40)
       val core = Seq.fill(k)(rnd.nextLong(100000L)).distinct
       val a = (core ++ Seq.fill(rnd.nextInt(15))(100000L + rnd.nextLong(100000L)).distinct).sorted.toArray
       val b = (core ++ Seq.fill(rnd.nextInt(15))(200000L + rnd.nextLong(100000L)).distinct).sorted.toArray
-      val tau = Seq(0.5, 0.8, 0.9)(rnd.nextInt(3))
+      (a, b, taus(rnd.nextInt(3)))
+    }
+    val boundary = for ((a, b) <- boundaryPairs; tau <- taus) yield (a, b, tau)
+    for ((a, b, tau) <- random ++ boundary) {
       val exact = graft.functions.SortedLongIntersectCount(lit(a), lit(b))
         .eval(null).asInstanceOf[Long]
       val bounded = graft.functions
         .SortedLongIntersectCountBounded(lit(a), lit(b), tau)
         .eval(null).asInstanceOf[Long]
       val jE = jac(exact, a.length, b.length)
-      if (!jE.isNaN && jE >= tau) assert(bounded == exact)
+      if (!jE.isNaN && jE >= tau)
+        assert(bounded == exact, s"tau=$tau n=${a.length} m=${b.length}")
       else {
         val jB = jac(bounded, a.length, b.length)
         assert(bounded <= exact && (jB.isNaN || jB < tau))

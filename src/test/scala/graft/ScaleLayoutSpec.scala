@@ -25,6 +25,17 @@ class ScaleLayoutSpec extends GraftSpec {
     }
   }
 
+  test("Tables.spread leaves a DataFrame with unknown size stats as it is") {
+    import TestEnv.spark.implicits._
+    // An RDD-backed plan has no size estimate, so the optimizer reports
+    // spark.sql.defaultSizeInBytes (Long.MaxValue): the ceil-divides that
+    // size the repartition must not wrap on it.
+    val df = spark.sparkContext.parallelize(1L to 100L, 1).toDF("id")
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(bytes > BigInt(Long.MaxValue - spark.sessionState.conf.filesMaxPartitionBytes))
+    assert(Tables.spread(spark, df, col("id")) eq df)
+  }
+
   test("bucketed orders⋈lineitem joins with ZERO shuffle exchanges") {
     val dir = Files.createTempDirectory("graft_bucketed").toFile
     try {

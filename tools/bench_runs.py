@@ -101,16 +101,7 @@ def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     repo = os.environ.get("SPARK_GRAFT_REPO_DIR") or os.getcwd()
     side = os.path.join(repo, "BENCH_FULL.json")
-    add_opens = []
-    for p in ("java.lang java.lang.invoke java.lang.reflect java.io java.net "
-              "java.nio java.util java.util.concurrent "
-              "java.util.concurrent.atomic sun.nio.ch sun.nio.cs "
-              "sun.security.action sun.util.calendar").split():
-        add_opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-    cmd = ["java", *add_opens, "-Xmx8g", "-Dspark.ui.enabled=false",
-           "-Dspark.sql.session.timeZone=UTC",
-           "-cp", f"{repo}/target/scala-2.13/classes:/opt/spark/jars/*",
-           "graft.Bench"]
+    cmd = [os.path.join(repo, "tools", "spark_java.sh"), "-Xmx8g", "graft.Bench"]
     sidecars = []
     for i in range(n):
         # graft.Bench's sidecar write is best-effort (swallows IO errors and

@@ -1,6 +1,6 @@
 #!/bin/bash
-# Local runner for graft.ScaleProbe (dev tooling, mirrors run_verify.sh's
-# JVM bracket). Usage: tools/run_scaleprobe.sh <baseDir> <bigDir> <factor>
+# Local runner for graft.ScaleProbe (dev tooling, launched like
+# run_verify.sh). Usage: tools/run_scaleprobe.sh <baseDir> <bigDir> <factor>
 # Optional: SPARK_GRAFT_ONLY to focus, SPARK_GRAFT_XMX (default 64g — the
 # 100x staged legs keep checkpoint + shuffle state well past the 8g verify
 # bracket).
@@ -8,15 +8,5 @@ set -e
 BASE=${1:-/root/testdata/sf0.1}
 BIG=${2:?big dir required}
 FACTOR=${3:?factor required}
-CLASSES=/root/repo/target/scala-2.13/classes
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-java $ADD_OPENS -Xmx${SPARK_GRAFT_XMX:-64g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" graft.ScaleProbe "$BASE" "$BIG" "$FACTOR"
+exec "$(dirname "$0")/spark_java.sh" -Xmx${SPARK_GRAFT_XMX:-64g} \
+  graft.ScaleProbe "$BASE" "$BIG" "$FACTOR"
